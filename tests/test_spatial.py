@@ -87,6 +87,106 @@ def test_knn_matches_bruteforce(spark):
         assert have == want, f"{u}: {have} != {want}"
 
 
+@pytest.fixture(scope="module")
+def knn_city(spark):
+    """Grid-city sidewalks, their res-9 kNN cover, and 36 points: 24
+    inside the city (settled by phase 1 for first_radius >= 1) and 12
+    placed 200-1500 m outside it — stragglers that only phase 2 reaches,
+    the farthest beyond disk(4) or even disk(8)."""
+    nodes, ways = synth.osm_grid(spark, g=5, with_noise_ways=False)
+    gw = N.geom_ways(nodes, N.split_streets(ways))
+    sw = SW.make_sidewalks(gw)
+    segs = SP.street_segments(sw.withColumn("kind", F.lit("sidewalk")))
+    seg_cells = SP.segments_by_cell(SP.street_buffers(segs)).persist()
+    rng = np.random.default_rng(11)
+    rows = [(f"u{i}", "e", float(47.60 + rng.uniform(0, 4) * synth.LAT_STEP),
+             float(-122.33 + rng.uniform(0, 4) * synth.LNG_STEP))
+            for i in range(24)]
+    top = 47.60 + 4 * synth.LAT_STEP
+    east = -122.33 + 4 * synth.LNG_STEP
+    for n, off in enumerate([200.0, 300.0, 500.0, 800.0, 1100.0, 1500.0]):
+        la, lg = geom.latlng_offset(top, -122.33 + 2 * synth.LNG_STEP, 0.0, off)
+        rows.append((f"n{n}", "e", float(la), float(lg)))
+        la, lg = geom.latlng_offset(47.60 + 2 * synth.LAT_STEP, east, off, 0.0)
+        rows.append((f"x{n}", "e", float(la), float(lg)))
+    cover = seg_cells.select("segment_id", "cell").collect()
+    seg_rows = segs.collect()
+    yield _points(spark, rows), seg_cells, rows, seg_rows, cover
+    seg_cells.unpersist()
+
+
+def _knn_brute_force(rows, seg_rows, cover, k, ring):
+    """Numpy top-k per point over the segments whose res-9 cover meets
+    the point's disk(ring), tie-broken like knn_join (dist, way, seg)."""
+    a = np.array([[s.alat, s.alng, s.blat, s.blng] for s in seg_rows])
+    sid = np.array([s.segment_id for s in seg_rows])
+    wid = np.array([s.way_id for s in seg_rows])
+    cov_sid = np.array([c.segment_id for c in cover])
+    cov_cell = np.array([c.cell for c in cover])
+    want = {}
+    for (u, _, plat, plng) in rows:
+        near = np.isin(cov_cell, cells.disk(cells.cell(plat, plng, 9), ring))
+        idx = np.flatnonzero(np.isin(sid, cov_sid[near]))
+        d = geom.point_segment_dist_m(plat, plng, a[idx, 0], a[idx, 1],
+                                      a[idx, 2], a[idx, 3])
+        order = np.lexsort((sid[idx], wid[idx], np.round(d, 9)))[:k]
+        want[u] = [(int(sid[idx][o]), float(d[o])) for o in order]
+    return want
+
+
+@pytest.mark.parametrize("k", [1, 2])
+@pytest.mark.parametrize("first_radius,max_ring", [
+    (fr, mr) for fr in (0, 1, 2) for mr in sorted({fr, 4, 8})])
+def test_knn_probe_matches_bruteforce_across_radii(spark, knn_city,
+                                                   first_radius, max_ring, k):
+    pts, seg_cells, rows, seg_rows, cover = knn_city
+    out = SP.knn_join(pts, seg_cells, k=k, max_ring=max_ring,
+                      first_radius=first_radius).collect()
+    got = {}
+    for r in out:
+        got.setdefault(r.url, []).append((r.knn_rank, r.segment_id, r.dist_m))
+    want = _knn_brute_force(rows, seg_rows, cover, k,
+                            max(max_ring, first_radius))
+    bound = first_radius * cells.cell_size_deg(9) * geom.M_PER_DEG * 0.5
+    stragglers = [u for u, w in want.items() if not w or w[-1][1] > bound]
+    assert len(stragglers) >= 12  # every outside point needs phase 2
+    assert sum(1 for w in want.values() if not w) < len(rows)
+    for u, w in want.items():
+        have = sorted(got.get(u, []))
+        assert [rk for rk, _, _ in have] == list(range(1, len(w) + 1)), u
+        assert [s for _, s, _ in have] == [s for s, _ in w], u
+        assert [d for _, _, d in have] == pytest.approx([d for _, d in w],
+                                                        abs=1e-6), u
+
+
+def test_knn_plan_size_constant_in_ring_radius(spark, knn_city):
+    """The ring probe is two SEQUENCE explodes, so the optimized plan of
+    a disk(8) second probe is as small as a disk(2) one — the literal
+    (2r+1)^2-element probe array grew it by ~60 characters per cell."""
+    pts, seg_cells = knn_city[:2]
+    # a local copy of the cover: the derivation of the real one prints
+    # ~0.5 MB of plan that would drown the probe's share
+    local_cells = spark.createDataFrame(seg_cells.collect(), seg_cells.schema)
+
+    def plan_len(k, max_ring):
+        df = SP.knn_join(pts, local_cells, k=k, max_ring=max_ring)
+        return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+    # plan strings elide arguments past maxToStringFields (25 by default),
+    # which would hide all but 25 elements of a literal probe array
+    key = "spark.sql.debug.maxToStringFields"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "100000")
+    try:
+        for k in (1, 2):
+            assert plan_len(k, 8) <= plan_len(k, 2) + 400
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def test_knn_rank_and_distance_sane(spark):
     nodes, ways = synth.micro_fixture(spark, "straight3")
     gw = N.geom_ways(nodes, ways)

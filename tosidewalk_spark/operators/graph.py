@@ -85,11 +85,12 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
 
     Plan: the edge relation is pre-joined with outdeg ONCE and persisted
     as ``ew`` (r6 — the old shape re-aggregated and re-joined outdeg
-    inside every round); every round is then ONE join(on src) →
-    hash-agg(dst) → LEFT join back to the node relation, so nodes with no
-    in-edges stay at ``base`` instead of dropping out; each round's rank
-    vector is cut off with a localCheckpoint (it is referenced twice per
-    round — see the loop comment).
+    inside every round), and the raw edge cache is dropped once ``ew``
+    and the node relation are built; every round is then ONE join(on
+    src) → hash-agg(dst) → LEFT join back to the node relation, so
+    nodes with no in-edges stay at ``base`` instead of dropping out; each
+    round's rank vector is cut off with a localCheckpoint (it is
+    referenced twice per round — see the loop comment).
 
     Output: (node_id, rank_fx, out_deg) — rank_fx sums to ~scale (minus
     the documented floor leak)."""
@@ -128,14 +129,19 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
                                 "COALESCE(_in, CAST(0 AS BIGINT)))"
                                 " DIV 100 AS BIGINT)").alias("rank_fx"))
                  .localCheckpoint())
-    out = (ranks.join(outdeg, F.col("node_id") == F.col("src"), "left")
+    # e is read only to build nodes and ew, and the first round's eager
+    # localCheckpoint materialized both: release it now instead of for
+    # the result's lifetime.  out_deg below comes from ew for the same
+    # reason (out_deg is a function of src, so the distinct is exact).
+    e.unpersist()
+    od = ew.select("src", "out_deg").distinct()
+    out = (ranks.join(od, F.col("node_id") == F.col("src"), "left")
            .select("node_id", "rank_fx",
                    F.expr("COALESCE(out_deg, CAST(0 AS BIGINT))")
                    .alias("out_deg")))
     # cache scope = result lifetime (the knn_join pattern, spatial.py): a
     # plan that outlives the result recomputes from lineage — slower,
     # never wrong
-    weakref.finalize(out, _safe_unpersist, e)
     weakref.finalize(out, _safe_unpersist, nodes)
     weakref.finalize(out, _safe_unpersist, ew)
     return out

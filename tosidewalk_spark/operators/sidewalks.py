@@ -121,7 +121,7 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
     # left = rotate +90 (lx, ly) = (x - vy*d, y + vx*d); right the mirror;
     # unproject: lat0 + py / M, lng0 + px / (M * cs) — kernel op order
     offs = v.select(
-        "way_id", "highway", "_n",
+        F.col("way_id").alias("_pid"), "highway", "_n",
         F.expr(f"TRANSFORM(SEQUENCE(1, _n), k -> ELEMENT_AT(lats, 1) "
                f"+ (ELEMENT_AT(_ys, k) + ELEMENT_AT(_vxs, k) * {d}) / {M})").alias("_llats"),
         F.expr(f"TRANSFORM(SEQUENCE(1, _n), k -> ELEMENT_AT(lngs, 1) "
@@ -132,11 +132,11 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
                f"+ (ELEMENT_AT(_xs, k) + ELEMENT_AT(_vys, k) * {d}) / ({M} * _cs))").alias("_rlngs"))
     sided = offs.select("*", F.explode(F.expr("ARRAY(0, 1)")).alias("side"))
     return sided.select(
-        F.expr(f"{SW_WAY_BASE} + 2 * way_id + side").alias("way_id"),
-        F.col("way_id").alias("parent_way_id"),
+        F.expr(f"{SW_WAY_BASE} + 2 * _pid + side").alias("way_id"),
+        F.col("_pid").alias("parent_way_id"),
         F.col("side"),
         F.expr(f"TRANSFORM(SEQUENCE(0, _n - 1), k -> "
-               f"{SW_NODE_BASE} + way_id * 20000 + side * 10000 + k)").alias("node_ids"),
+               f"{SW_NODE_BASE} + _pid * 20000 + side * 10000 + k)").alias("node_ids"),
         F.expr("CASE WHEN side = 0 THEN _llats ELSE _rlats END").alias("lats"),
         F.expr("CASE WHEN side = 0 THEN _llngs ELSE _rlngs END").alias("lngs"),
         F.col("highway"))

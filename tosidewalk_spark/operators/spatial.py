@@ -14,8 +14,9 @@ Scale design:
   aggregation in G6/G7.
 - kNN is a two-phase declarative plan: one disk-probe equi-join settles
   nearly all points with a provable ring lower bound; only stragglers get
-  a wider second probe.  Results are EXACTLY the brute-force top-k (the
-  DuckDB oracle checks this).
+  a wider second probe.  Each probe is two SEQUENCE explodes, so the plan
+  does not grow with the ring radius.  Results are EXACTLY the brute-force
+  top-k (the DuckDB oracle checks this).
 - EVERYTHING here is pure Spark SQL in whole-stage codegen — buffer
   corners, cell covers, ray-cast containment and point-segment distance
   are shared sqlfns templates with bit-identical numpy and DuckDB twins.
@@ -211,9 +212,9 @@ def segments_by_cell(buffers: DataFrame) -> DataFrame:
 
 def _probe_ji_cols(res: int) -> list:
     """The point's lattice coordinates at ``res``, staged ONCE as integer
-    columns.  The probe arrays below reference these columns instead of
-    re-deriving FLOOR((lat+90)/s) inside every array element: with the
-    old per-element form a disk(6) probe repeated the j/i derivation —
+    columns.  The probe explodes (_probe_cells) reference these columns
+    instead of re-deriving FLOOR((lat+90)/s) per probe cell: with the old
+    per-element array form a disk(6) probe repeated the j/i derivation —
     and, when lat/lng were unmaterialized upstream expressions (the
     map_match ping chain's hash geocode), the WHOLE upstream chain —
     169 times per row inside one giant interpreted projection (measured
@@ -225,15 +226,28 @@ def _probe_ji_cols(res: int) -> list:
     ]
 
 
-def _probe_cells_expr(res: int, r_hi: int) -> F.Column:
-    """(2*r_hi+1)^2 probe cells (Chebyshev disk) around the point's cell
-    at ``res`` from the staged ``_pj``/``_pi`` columns (_probe_ji_cols) —
-    every element is two integer adds + a multiply, pure codegen."""
-    offs = [(di, dj) for di in range(-r_hi, r_hi + 1) for dj in range(-r_hi, r_hi + 1)]
-    return F.array(*[
-        F.expr(f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-               f"+ (_pj + {dj}) * {sqlfns.POW2_28} + (_pi + {di})")
-        for di, dj in offs])
+def _probe_cells(src: DataFrame, res: int, r_hi: int) -> DataFrame:
+    """Replicate every row of ``src`` to the (2*r_hi+1)^2 cells of the
+    Chebyshev disk around its staged ``_pj``/``_pi`` lattice coordinates
+    (_probe_ji_cols) at ``res``, as a ``cell`` column — the scatter_disk
+    idiom: two SEQUENCE explodes + one small integer expression.
+
+    The plan is O(1) in ``r_hi``.  A literal ARRAY of (2r+1)^2 cell
+    expressions (289 leaves for disk(8)) cost hundreds of py4j parse
+    calls per knn_join, a re-analysis of the whole array in every later
+    DataFrame op over the result, and one giant generated projection:
+    on a 4-core host a 1 000-point kNN + tiles job (perfbench
+    knn-hotspot) took a median 3.45 s with it and 2.09 s with the
+    explodes.  The probe rows are the same multiset as the array form's,
+    and like it the offsets are not clipped at the 28-bit lattice bounds
+    (scatter_disk clips them)."""
+    seq = f"EXPLODE(SEQUENCE(-{r_hi}, {r_hi}))"
+    return (src.select("*", F.expr(seq).alias("_dj"))
+            .select("*", F.expr(seq).alias("_di"))
+            .withColumn("cell", F.expr(
+                f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
+                f"+ (_pj + _dj) * {sqlfns.POW2_28} + (_pi + _di)"))
+            .drop("_dj", "_di"))
 
 
 def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
@@ -259,14 +273,19 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
       operator is a single Catalyst plan (AQE broadcasts the tiny settled-
       key side of the semi/anti joins at runtime).
 
+    Both probes replicate each point to its disk cells with two SEQUENCE
+    explodes (_probe_cells), never a literal array of (2r+1)^2 cell
+    expressions: the plan, its analysis cost in every DataFrame op over
+    the result, and its generated code stay constant in the ring radius.
+
     Only phase-1's top-k rows (<= k per point; for k=1 exactly one row
     per point, matched or not) are persisted for reuse across the
     consumers — never the raw candidate set."""
     s = cells.cell_size_deg(res)
     # conservative meters-per-cell lower bound (lng edge at |lat|<=60)
     edge_min_m = s * geom.M_PER_DEG * 0.5
-    # _pj/_pi staged once per point (see _probe_ji_cols): probe arrays
-    # become pure integer arithmetic over these columns
+    # _pj/_pi staged once per point (see _probe_ji_cols): the probe
+    # explodes are pure integer arithmetic over these columns
     pts = points.select("url", "entity", "lat", "lng", "cell9",
                         *_probe_ji_cols(res))
     # per-segment frame staged on the tiny build side (same JIT-limit
@@ -292,7 +311,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
     def topk(src: DataFrame, r_hi: int) -> DataFrame:
         # broadcast the segment-cover side: the fixed-size city network —
         # the points side is the data-scaled one and must stream
-        cand = (src.withColumn("cell", F.explode(_probe_cells_expr(res, r_hi)))
+        cand = (_probe_cells(src, res, r_hi)
                 .join(F.broadcast(sc), "cell")
                 .select("url", "entity", "lat", "lng", "cell9",
                         "way_id", "segment_id", dist_expr.alias("dist_m")))
@@ -337,7 +356,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
         # anti-joined pts against the settled set, i.e. two corpus-wide
         # shuffles on (url, entity) purely to find the zero-candidate
         # points phase 1 had dropped (review r4: 4.3 -> ~2 s at sf0.1).
-        cand = (pts.withColumn("cell", F.explode(_probe_cells_expr(res, first_radius)))
+        cand = (_probe_cells(pts, res, first_radius)
                 .join(F.broadcast(sc), "cell", "left")
                 .select("url", "entity", "lat", "lng", "cell9",
                         "way_id", "segment_id", dist_expr.alias("dist_m")))
